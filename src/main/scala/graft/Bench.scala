@@ -357,21 +357,16 @@ object Bench {
     // top-N slowest queries, trimmed so the whole line stays < 1900
     // chars: names are the contract keys (never shortened), values at
     // 3 decimals (a tail-line convenience copy; full precision lives in
-    // the summary file and the jsonl record)
+    // the summary file and the jsonl record). A true prefix of the
+    // slowest-first list: the first entry that does not fit ends it, so
+    // a shorter, faster entry can never stand in for a slower one
     val topQs = {
-      val sorted = results.collect { case (k, Right(t)) => (k, t) }
-        .sortBy(-_._2)
-      val sb = new StringBuilder
-      var taken = 0
+      val entries = results.collect { case (k, Right(t)) => (k, t) }
+        .sortBy(-_._2).map { case (k, t) => jstr(k) + ":" + f"$t%.3f" }
       val budget = 1300
-      sorted.foreach { case (k, t) =>
-        val entry = jstr(k) + ":" + f"$t%.3f"
-        if (sb.length + entry.length + 1 <= budget) {
-          if (taken > 0) sb.append(',')
-          sb.append(entry); taken += 1
-        }
-      }
-      s"{${sb.toString}}"
+      // running length of the joined prefix (entries plus separators)
+      val lens = entries.scanLeft(-1)(_ + _.length + 1).tail
+      s"{${entries.take(lens.takeWhile(_ <= budget).size).mkString(",")}}"
     }
     println(s"""{"metric":"total_tail","value":$total,"unit":"sec","calibration":$calibration,"calibration_shuffle":$calibrationShuffle,"cpus":$cpus,"n_queries":${results.size},"n_errors":${errs.size},"n_retimed":${retimes.size},"queries":$topQs$summaryField$suiteField$recordField,"sf":"$sfDir"}""")
     spark.stop()

@@ -673,6 +673,7 @@ final class PipelineSession(
       }
     }
 
+    rebuilt.clear()
     val t0 = System.nanoTime()
     // dbt execution semantics: a failed node SKIPS its downstream (a
     // descendant executing against a missing — or worse, a STALE
@@ -728,6 +729,14 @@ final class PipelineSession(
         }
       }
     val report = RunReport(results, (System.nanoTime() - t0) / 1000000)
+    // a restored view anywhere downstream of what this run rebuilt is
+    // stale from now on — unselected descendants included, which this
+    // run never visited — so a later run in this session must not keep it
+    ViewStore.forgetRestoredViews(spark, order.foldLeft(Set.empty[String]) {
+      (acc, id) =>
+        if (rebuilt.contains(id) || nodeMap(id).prevs.exists(acc)) acc + id
+        else acc
+    })
     // record the base for the next --changed-only run: models that ran
     // (or verified-skipped) successfully THIS run AND whose every
     // transitive ancestor did too — failed models and their descendants
@@ -839,6 +848,9 @@ final class PipelineSession(
     // pairs statuses with the wrong model's header. Emit one atomic line
     // per node instead (println of a single String is synchronized).
     if (!buffered) print(header)
+    // anything but a changed-only skip (re)builds the node or leaves it
+    // unknown; skipNode decides for the skips
+    if (!skip || forcedStatus.nonEmpty) { rebuilt.add(node.id); () }
     val t0 = System.nanoTime()
     val (status, err) = forcedStatus match {
       // a forced skip (failed upstream / fail-fast abort) executes
@@ -862,22 +874,41 @@ final class PipelineSession(
     NodeResult(node.id, status, ms, err)
   }
 
+  /** Nodes this run executed, re-registered, or skipped downstream of
+    * either (upstream first: the waves and the sequential order both run
+    * every upstream before its dependents). A skipped view downstream of
+    * one of them must re-register — its registered plan pins the upstream
+    * relations it was analyzed against. Concurrent: parallel waves add
+    * from pool threads.
+    */
+  private val rebuilt = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
   /** `--changed-only` fast path for a fingerprint-unchanged model. A VIEW
-    * is re-registered from its (identical) rendered SELECT — pure
-    * analysis, no job, and it keeps the db_path store current; a TABLE is
-    * verified present in the catalog by the skip decision and left as the
-    * previous run materialized it. The status string is the UX contract.
+    * keeps the registration [[ViewStore.restore]] gave it when that came
+    * from exactly the SELECT it renders to now and nothing upstream was
+    * rebuilt in this run ([[ViewStore.keepsRestoredView]]): no analysis,
+    * no job, no store write. Otherwise it is re-registered from its
+    * (identical) rendered SELECT — pure analysis — and re-saved, which
+    * keeps the db_path store current. A TABLE is verified present in the
+    * catalog by the skip decision and left as the previous run
+    * materialized it. The status string is the UX contract.
     */
   private def skipNode(node: ModelNode): String = {
+    val upstreamRebuilt = node.prevs.exists(rebuilt.contains)
     if (node.materialize.map(_.toLowerCase).forall(_ == "view")) {
       val raw = SqlText.splitStatements(node.renderedSrc).head
       val select = DialectShim.rewrite(raw, spark)
-      try {
-        spark.sql(select).createOrReplaceTempView(node.id)
-        ViewStore.saveView(config.dbPath, node.id, select, Some(raw))
-      } catch { case e: Exception =>
-        throw StatementExecutionError(e.getMessage, select, node.path) }
-    }
+      if (upstreamRebuilt ||
+          !ViewStore.keepsRestoredView(spark, config.dbPath, node.id,
+            select, raw)) {
+        rebuilt.add(node.id)
+        try {
+          spark.sql(select).createOrReplaceTempView(node.id)
+          ViewStore.saveView(config.dbPath, node.id, select, Some(raw))
+        } catch { case e: Exception =>
+          throw StatementExecutionError(e.getMessage, select, node.path) }
+      }
+    } else if (upstreamRebuilt) { rebuilt.add(node.id); () }
     "SKIP unchanged"
   }
 
@@ -1023,7 +1054,6 @@ final class PipelineSession(
         // old location — the renamed table reads zero rows. Swap by
         // directory move + path registration instead: partition
         // discovery re-derives the layout from the moved directory
-        // (the same registration ViewStore.restore uses)
         Files.move(stageLoc, tgtLoc)
         // the stage's catalog entry now points at a moved (absent)
         // directory; dropping it is metadata-only

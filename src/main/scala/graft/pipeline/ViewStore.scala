@@ -1,8 +1,13 @@
 package graft.pipeline
 
 import java.nio.file.{Files, Path, Paths}
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Cross-run persistence of pipeline materializations — the Spark analog of
   * the reference's views living in the `.duckdb` file (`db_path`,
@@ -13,14 +18,23 @@ import org.apache.spark.sql.SparkSession
   * forgets saveAsTable entries across JVMs, so parity needs a side store:
   * each view model's rendered SELECT is written to
   * `<dbPath>/_graft_views/<id>.sql` plus an ordered manifest (pipeline topo
-  * order — dependencies replay before dependents); table models record a
-  * manifest entry only (their parquet already lives in the warehouse) and
-  * are re-registered from their warehouse directory on restore. A missing
-  * `db_path` is the reference's in-memory mode: nothing persists.
+  * order — dependencies replay before dependents). A table model's
+  * parquet already lives in the warehouse; its manifest entry records the
+  * catalog schema, partition columns and bucket spec, so restore
+  * re-registers it with one `CREATE TABLE … LOCATION` and reads no file
+  * (an entry written before the record existed is inferred from the
+  * parquet once and rewritten with it). A missing `db_path` is the
+  * reference's in-memory mode: nothing persists.
   *
   * Restore is warn-and-skip per entry, so a view over a since-dropped
   * table degrades exactly like a stale view in the reference: visible
   * error on use, no startup crash.
+  *
+  * Views a session registered from the store are remembered per session
+  * ([[keepsRestoredView]]): a `--changed-only` skip of such a view keeps
+  * that registration — no second analysis, no store write — while the
+  * stored SQL is still what the dialect shim produces and nothing upstream
+  * of it was rebuilt.
   */
 object ViewStore {
 
@@ -84,26 +98,67 @@ object ViewStore {
       appendEntry(db, "view", id)
     }
 
-  /** Catalog-aware variant: if `id` is a BUCKETED table (saveAsTable with
-    * bucketBy — e.g. graft.ext.SinkOps.writeBucketedTable), the bucket
-    * spec is recorded in the manifest so [[restore]] re-registers it with
-    * CLUSTERED BY and the table keeps its zero-exchange join property in
-    * later sessions — losing the spec silently re-adds the big-side
-    * shuffle the bucketed layout was bought to remove.
+  /** Catalog-aware variant: records the table's catalog schema, partition
+    * columns and bucket spec (see [[TableRecord]]) so [[restore]]
+    * re-registers it without reading its files. The bucket spec matters
+    * beyond speed: a BUCKETED table (saveAsTable with bucketBy — e.g.
+    * graft.ext.SinkOps.writeBucketedTable) re-registered without CLUSTERED
+    * BY loses its zero-exchange join property in later sessions, silently
+    * re-adding the big-side shuffle the bucketed layout was bought to
+    * remove.
     */
   def saveTable(spark: SparkSession, dbPath: Option[String], id: String): Unit =
     dbPath.foreach { db =>
+      // no record (metadata unreadable) leaves a bare entry, which the
+      // next restore infers and upgrades like any older entry
       val extra = try {
-        spark.sessionState.catalog
-          .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(id))
-          .bucketSpec
-          .map(bs => s"\t${bs.numBuckets}\t${bs.bucketColumnNames.mkString(",")}" +
-            s"\t${bs.sortColumnNames.mkString(",")}")
-          .getOrElse("")
+        val meta = spark.sessionState.catalog.getTableMetadata(TableIdentifier(id))
+        TableRecord(meta.schema, meta.partitionColumnNames, meta.bucketSpec).suffix
       } catch { case _: Exception => "" }
       Files.createDirectories(storeDir(db))
       appendEntry(db, "table", id, extra)
     }
+
+  /** A table manifest entry's record:
+    * `table<TAB>id<TAB>nBuckets<TAB>bucketCols<TAB>sortCols<TAB>partitionCols<TAB>schemaJson`,
+    * column lists comma-joined, the bucket fields empty for an unbucketed
+    * table. Older entries carry only `table<TAB>id` or, when bucketed, the
+    * first three record fields.
+    */
+  private final case class TableRecord(schema: StructType,
+                                       partitionCols: Seq[String],
+                                       bucket: Option[BucketSpec]) {
+    /** The entry's fields after the id, each tab-prefixed. */
+    def suffix: String = Seq("",
+      bucket.fold("")(_.numBuckets.toString),
+      bucket.fold("")(_.bucketColumnNames.mkString(",")),
+      bucket.fold("")(_.sortColumnNames.mkString(",")),
+      partitionCols.mkString(","),
+      schema.json).mkString("\t")
+  }
+
+  private object TableRecord {
+    private def cols(f: String): Seq[String] = f.split(",").filter(_.nonEmpty).toSeq
+    private def bucketOf(fields: Array[String]): Option[BucketSpec] =
+      fields.lift(2).filter(_.nonEmpty).map(n =>
+        BucketSpec(n.toInt, cols(fields(3)), cols(fields.lift(4).getOrElse(""))))
+
+    def parse(fields: Array[String]): Option[TableRecord] =
+      if (fields.length < 7) None
+      else Some(TableRecord(DataType.fromJson(fields(6)).asInstanceOf[StructType],
+        cols(fields(5)), bucketOf(fields)))
+
+    /** An older entry's record, read from the table's parquet the way
+      * restore used to register it: the footer schema plus the partition
+      * columns the directory layout implies (one Spark job). */
+    def infer(spark: SparkSession, fields: Array[String], loc: Path): TableRecord = {
+      val df = spark.read.parquet(loc.toString)
+      val parts = df.queryExecution.analyzed.collectFirst {
+        case r: LogicalRelation => r.relation
+      }.collect { case fs: HadoopFsRelation => fs.partitionSchema.fieldNames.toSeq }
+      TableRecord(df.schema, parts.getOrElse(Nil), bucketOf(fields))
+    }
+  }
 
   // A re-saved model MOVES to the end: models persist in execution order,
   // and a run executes the whole DAG topologically, so "last saved last"
@@ -117,11 +172,25 @@ object ViewStore {
     val m = manifest(dbPath)
     val cur =
       if (Files.exists(m)) Files.readAllLines(m).asScala.toSeq else Seq.empty
-    def sameId(l: String): Boolean =
-      l.split("\t", -1).lift(1).contains(id)
-    val next = cur.filterNot(sameId) :+ s"$kind\t$id$extra"
+    val next = cur.filterNot(isEntryOf(id)) :+ s"$kind\t$id$extra"
     Files.write(m, next.asJava)
   }
+
+  private def isEntryOf(id: String)(line: String): Boolean =
+    line.split("\t", -1).lift(1).contains(id)
+
+  /** Replace `id`'s manifest line IN PLACE (an upgrade of its record, not
+    * a re-save: its replay position stays). Best effort — a read-only
+    * store just repeats the inference next time. */
+  private def rewriteEntry(dbPath: String, id: String, line: String): Unit =
+    this.synchronized {
+      try {
+        val m = manifest(dbPath)
+        val cur = Files.readAllLines(m).asScala.toSeq
+        Files.write(m, cur.map(l => if (isEntryOf(id)(l)) line else l).asJava)
+        ()
+      } catch { case _: java.io.IOException => () }
+    }
 
   // --- run fingerprints (selective re-execution, `run --changed-only`) ---
 
@@ -136,11 +205,18 @@ object ViewStore {
   def saveFingerprints(dbPath: Option[String],
                        fps: Map[String, String]): Unit =
     dbPath.foreach { db =>
-      Files.createDirectories(storeDir(db))
-      Files.write(fingerprintFile(db),
-        fps.toSeq.sorted.map { case (id, fp) => s"$id\t$fp" }.asJava)
-      ()
+      writeIfChanged(fingerprintFile(db),
+        fps.toSeq.sorted.map { case (id, fp) => s"$id\t$fp" })
     }
+
+  /** Write `lines` to `f` unless it already holds exactly them: a run that
+    * changed nothing leaves the store untouched, mtimes included. */
+  private def writeIfChanged(f: Path, lines: Seq[String]): Unit = {
+    Files.createDirectories(f.getParent)
+    if (!Files.exists(f) || Files.readAllLines(f).asScala != lines) {
+      Files.write(f, lines.asJava); ()
+    }
+  }
 
   /** Ids persisted as TABLE models in the manifest — the Spark-free
     * approximation of `spark.catalog.tableExists` the `viz`
@@ -182,14 +258,11 @@ object ViewStore {
   def saveRunLedger(dbPath: Option[String], rows: Seq[(String, String)],
                     flags: Map[String, String]): Unit =
     dbPath.foreach { db =>
-      Files.createDirectories(storeDir(db))
       def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
-      val lines =
+      writeIfChanged(runLedgerFile(db),
         flags.toSeq.sorted.map { case (k, v) =>
           s"flag\t${enc(k)}\t${enc(v)}" } ++
-          rows.map { case (status, id) => s"node\t$status\t$id" }
-      Files.write(runLedgerFile(db), lines.asJava)
-      ()
+          rows.map { case (status, id) => s"node\t$status\t$id" })
     }
 
   /** The last recorded run against this db_path: (status→id rows in
@@ -232,7 +305,7 @@ object ViewStore {
             if (!spark.catalog.tableExists(id)) {
               // managed-table data written by saveAsTable lives at
               // <warehouse>/<id>; re-register it as a parquet table
-              restoreTableEntry(spark, fields, warehouseLocation(spark, id))
+              restoreTableEntry(spark, dbPath, fields, warehouseLocation(spark, id))
               n += 1 // count only tables this call actually registered
             }
           } catch { case e: Exception =>
@@ -272,7 +345,7 @@ object ViewStore {
             case "view" =>
               restoreViewEntry(spark, stateDir, id); Some(id)
             case "table" =>
-              restoreTableEntry(spark, fields,
+              restoreTableEntry(spark, stateDir, fields,
                 Paths.get(stateDir).resolve(
                   id.toLowerCase(java.util.Locale.ROOT)))
               Some(id)
@@ -348,7 +421,7 @@ object ViewStore {
               val dst = warehouseLocation(spark, id)
               copyDir(stage, dst)
               deleteTree(stage)
-              restoreTableEntry(spark, fields, dst)
+              restoreTableEntry(spark, stateDir, fields, dst)
               saveTable(spark, localDbPath, id)
               Some(id)
             case _ => None
@@ -381,14 +454,17 @@ object ViewStore {
   }
 
   /** One view manifest entry → temp-view registration (shared by
-    * [[restore]] and [[restoreDeferred]]): the stored rewritten SELECT,
-    * falling back to re-shimming the raw text when the rewritten form
-    * referenced session-scoped state.
+    * [[restore]], [[restoreDeferred]] and [[cloneFromState]]): the stored
+    * rewritten SELECT, falling back to re-shimming the raw text when the
+    * rewritten form referenced session-scoped state. The registration is
+    * remembered for [[keepsRestoredView]].
     */
   private def restoreViewEntry(spark: SparkSession, dbPath: String,
                                id: String): Unit = {
-    def register(sql: String): Unit =
+    def register(sql: String): Unit = {
       spark.sql(sql).createOrReplaceTempView(id)
+      remember(spark, id, sql)
+    }
     val stored = Files.readString(storeDir(dbPath).resolve(s"$id.sql"))
     try register(stored)
     catch { case e: Exception =>
@@ -402,60 +478,100 @@ object ViewStore {
     }
   }
 
-  /** One table manifest entry → catalog registration at `loc` (shared
-    * by [[restore]] and [[restoreDeferred]]).
-    */
-  private def restoreTableEntry(spark: SparkSession,
-                                fields: Array[String],
-                                loc: Path): Unit = {
-    val id = fields(1)
-    locally {
-      if (fields.length >= 4) {
-                // bucketed: re-register with the recorded CLUSTERED BY so
-                // the bucketed-scan distribution (zero-exchange joins)
-                // survives the session boundary. saveAsTable encodes the
-                // bucket id in each file name, which the bucketed scan
-                // reads back — the data needs no rewrite.
-                val nBuckets = fields(2).toInt
-                val bcols = fields(3).split(",").filter(_.nonEmpty)
-                  .map(c => s"`$c`").mkString(", ")
-                val scols = fields.lift(4).getOrElse("")
-                  .split(",").filter(_.nonEmpty).map(c => s"`$c`").mkString(", ")
-                val sorted = if (scols.nonEmpty) s"SORTED BY ($scols) " else ""
-                val schemaDDL = spark.read.parquet(loc.toString).schema.toDDL
-                spark.sql(s"CREATE TABLE `$id` ($schemaDDL) USING parquet " +
-                  s"CLUSTERED BY ($bcols) ${sorted}INTO $nBuckets BUCKETS " +
-                  s"LOCATION '${loc.toString}'")
-              } else {
-                spark.catalog.createTable(id, loc.toString, "parquet")
-                // a PARTITIONED table's partitions are catalog-tracked
-                // (manageFilesourcePartitions) and a path registration
-                // starts with none — recover them from the directory
-                // layout or the restored table reads zero rows. MSCK on
-                // an unpartitioned table errors; that error is the
-                // common no-op case here — but a GENUINE repair failure
-                // on a partitioned table would leave a registered table
-                // that silently reads zero rows, so it must be visible
-                // (ADVICE r15): log anything that isn't the
-                // not-partitioned no-op.
-                try { spark.sql(s"MSCK REPAIR TABLE `$id`"); () }
-                catch { case e: Exception =>
-                  // the common no-op is the NOT_A_PARTITIONED_TABLE
-                  // error condition — gate on the error CLASS (stable
-                  // API), with the message phrase as a fallback for
-                  // engines that don't carry conditions
-                  val noOp = (e match {
-                    case st: org.apache.spark.SparkThrowable =>
-                      st.getCondition == "NOT_A_PARTITIONED_TABLE"
-                    case _ => false
-                  }) || String.valueOf(e.getMessage).toLowerCase
-                    .contains("not a partitioned table")
-                  if (!noOp)
-                    println(s"WARNING: MSCK REPAIR failed for restored " +
-                      s"table `$id` — if it is partitioned it may read " +
-                      s"zero rows: ${e.getMessage}")
-                }
-              }
+  // --- restored-view registrations, per session ---
+
+  /** Views registered from the store, per session: id → (the SQL, the
+    * catalog's registration object). Weak keys drop a session's entries
+    * with the session; the registration is held weakly too, because its
+    * plan references the session. Guarded by its own lock (parallel waves
+    * read it concurrently). */
+  private val restoredViews = new java.util.WeakHashMap[SparkSession,
+    mutable.Map[String, (String, java.lang.ref.WeakReference[AnyRef])]]()
+
+  private def remember(spark: SparkSession, id: String, sql: String): Unit =
+    spark.sessionState.catalog.getRawTempView(id).foreach { reg =>
+      restoredViews.synchronized {
+        restoredViews.computeIfAbsent(spark, _ => mutable.Map.empty)
+          .update(id, (sql, new java.lang.ref.WeakReference[AnyRef](reg)))
+      }
     }
+
+  /** True when `spark` still holds the registration a restore gave view
+    * `id` (not replaced since), made from exactly `select`, and the store
+    * under `dbPath` still holds `select` and `raw` — re-registering and
+    * re-saving would then redo the same analysis and rewrite the same
+    * files. The caller must also know nothing upstream was rebuilt since
+    * (see [[forgetRestoredViews]]).
+    */
+  def keepsRestoredView(spark: SparkSession, dbPath: Option[String],
+                        id: String, select: String, raw: String): Boolean =
+    dbPath.exists { db =>
+      val mine = restoredViews.synchronized {
+        Option(restoredViews.get(spark)).flatMap(_.get(id))
+      }
+      def holds(f: String, text: String): Boolean = {
+        val p = storeDir(db).resolve(f)
+        Files.exists(p) && Files.readString(p) == text
+      }
+      mine.exists { case (sql, reg) =>
+        sql == select &&
+          spark.sessionState.catalog.getRawTempView(id).exists(_ eq reg.get) &&
+          holds(s"$id.sql", select) && holds(s"$id.raw.sql", raw)
+      }
+    }
+
+  /** Forget the restored registrations of `ids` in `spark`: a temp view's
+    * analyzed plan pins its upstream relations as they were when it was
+    * registered, so once anything upstream is rebuilt the registration is
+    * stale even though the catalog still holds it. */
+  def forgetRestoredViews(spark: SparkSession, ids: Iterable[String]): Unit =
+    restoredViews.synchronized {
+      Option(restoredViews.get(spark)).foreach(_ --= ids)
+    }
+
+  /** One table manifest entry → catalog registration at `loc` (shared by
+    * [[restore]], [[restoreDeferred]] and [[cloneFromState]]; `dbPath`
+    * owns the manifest the entry came from). One DDL path: the recorded
+    * schema, partitioning and bucketing go into a single CREATE TABLE, so
+    * nothing is inferred from the files (zero Spark jobs). An older entry
+    * without the record is inferred once and rewritten in place with it.
+    * The bucket spec keeps the bucketed-scan distribution (zero-exchange
+    * joins) across the session boundary — saveAsTable encodes the bucket
+    * id in each file name, which the bucketed scan reads back, so the
+    * data needs no rewrite.
+    */
+  private def restoreTableEntry(spark: SparkSession, dbPath: String,
+                                fields: Array[String], loc: Path): Unit = {
+    val id = fields(1)
+    val rec = TableRecord.parse(fields).getOrElse {
+      val r = TableRecord.infer(spark, fields, loc)
+      rewriteEntry(dbPath, id, s"table\t$id${r.suffix}")
+      r
+    }
+    def q(name: String) = "`" + name.replace("`", "``") + "`"
+    def cols(cs: Seq[String]) = cs.map(q).mkString(", ")
+    val partitioned =
+      if (rec.partitionCols.isEmpty) ""
+      else s" PARTITIONED BY (${cols(rec.partitionCols)})"
+    val clustered = rec.bucket.fold("") { b =>
+      s" CLUSTERED BY (${cols(b.bucketColumnNames)})" +
+        (if (b.sortColumnNames.isEmpty) ""
+         else s" SORTED BY (${cols(b.sortColumnNames)})") +
+        s" INTO ${b.numBuckets} BUCKETS"
+    }
+    val location = loc.toString.replace("\\", "\\\\").replace("'", "\\'")
+    spark.sql(s"CREATE TABLE ${q(id)} (${rec.schema.toDDL}) USING parquet" +
+      s"$partitioned$clustered LOCATION '$location'")
+    // a PARTITIONED table's partitions are catalog-tracked
+    // (manageFilesourcePartitions) and a path registration starts with
+    // none — recover them from the directory layout. If that fails the
+    // table would read zero rows, so it must not stay registered (the
+    // drop keeps the data: a LOCATION table is external)
+    if (rec.partitionCols.nonEmpty)
+      try { spark.sql(s"MSCK REPAIR TABLE ${q(id)}"); () }
+      catch { case e: Exception =>
+        spark.sql(s"DROP TABLE IF EXISTS ${q(id)}")
+        throw e
+      }
   }
 }

@@ -2864,4 +2864,120 @@ class PipelineE2ESpec extends AnyFunSuite {
     assert(stores == Seq("sql_tests_chk"), stores)
     assert(spark.table("slug_m__failures__sql_tests_chk").count() == 1)
   }
+
+  // --- changed-only skip reuse of restored view registrations ---
+
+  /** A table over an out-of-DAG feed table (its contents are not part of
+    * any fingerprint), a read_parquet view, and views over both. */
+  private def skipReuseFixture(p: String, db: Path): PipelineConfig =
+    fixture(
+      models = Map(
+        s"${p}_src" -> s"SELECT k, g FROM ${p}_feed",
+        s"${p}_raw" -> ("SELECT n_nationkey, n_regionkey FROM " +
+          s"read_parquet('$sfDir/nation.parquet')"),
+        s"${p}_mid" -> s"SELECT k, g FROM ${p}_src WHERE k >= 0",
+        s"${p}_join" -> (s"SELECT g FROM ${p}_mid " +
+          s"JOIN ${p}_raw ON n_regionkey = k"),
+        s"${p}_agg" -> s"SELECT count() AS n FROM ${p}_join"),
+      configExtra =
+        s"""db_path: $db
+           |models:
+           |  ${p}_src:
+           |    materialize: table""".stripMargin)._2
+
+  /** Region keys 0..n-1 as the feed: each joins 5 nations. */
+  private def writeFeed(p: String, n: Int): Unit =
+    spark.range(n).selectExpr("id AS k", "CAST(id AS STRING) AS g")
+      .write.mode("overwrite").saveAsTable(s"${p}_feed")
+
+  private def storeFiles(db: Path): Map[String, (Seq[Byte],
+      java.nio.file.attribute.FileTime)] = {
+    val s = Files.list(db.resolve("_graft_views"))
+    try s.toArray.toSeq.map(_.asInstanceOf[Path]).map { f =>
+      f.getFileName.toString ->
+        (Files.readAllBytes(f).toSeq, Files.getLastModifiedTime(f))
+    }.toMap
+    finally s.close()
+  }
+
+  private def aggOf(s: org.apache.spark.sql.SparkSession, p: String): Long =
+    s.table(s"${p}_agg").collect().head.getLong(0)
+
+  for (par <- Seq(false, true)) {
+    val mode = if (par) "parallel" else "sequential"
+
+    test(s"changed-only after restore, nothing changed ($mode): 0 Spark " +
+        "jobs, restored views kept, the view store untouched") {
+      val p = if (par) "srp_a" else "srs_a"
+      val db = Files.createTempDirectory("graft-skip-reuse")
+      writeFeed(p, 3)
+      val config = skipReuseFixture(p, db)
+      val full = new PipelineSession(spark, config, parallel = par).runNodes()
+      assert(full.errors.isEmpty, full.errors.map(_.render))
+      // two fresh sessions in turn: the first changed-only run also
+      // records a new run ledger (its statuses differ from the build's);
+      // the second must leave EVERY store file as it was
+      (1 to 2).foreach { round =>
+        val s = spark.newSession()
+        assert(ViewStore.restore(s, db.toString) == 4)
+        val before = storeFiles(db)
+        Thread.sleep(20) // a rewrite would move the mtime
+        val (r, jobs) = org.apache.spark.JobCounter.count(s.sparkContext)(
+          new PipelineSession(s, config, parallel = par,
+            changedOnly = true).runNodes())
+        assert(r.errors.isEmpty, r.errors.map(_.render))
+        assert(r.results.forall(_.status == "SKIP unchanged"), r.results)
+        assert(jobs == 0, s"round $round started $jobs Spark jobs")
+        val after = storeFiles(db)
+        val viewFiles = before.keySet.filter(f =>
+          f.endsWith(".sql") || f == "manifest.tsv")
+        assert(viewFiles.size == 9) // 4 views x (sql, raw) + manifest
+        viewFiles.foreach(f => assert(after(f) == before(f), f))
+        if (round == 2) assert(after == before)
+        assert(aggOf(s, p) == 15L)
+      }
+    }
+
+    test(s"changed-only ($mode): a skipped view downstream of a table " +
+        "that re-executes with an unchanged fingerprint re-registers and " +
+        "reads the new rows") {
+      val p = if (par) "srp_b" else "srs_b"
+      val db = Files.createTempDirectory("graft-skip-reuse-b")
+      writeFeed(p, 3)
+      val config = skipReuseFixture(p, db)
+      assert(new PipelineSession(spark, config, parallel = par).runNodes()
+        .errors.isEmpty)
+      val s = spark.newSession()
+      ViewStore.restore(s, db.toString)
+      assert(aggOf(s, p) == 15L)
+      // the feed grows and the table leaves the catalog: the table must
+      // execute again (same fingerprint), its views skip
+      writeFeed(p, 4)
+      ViewStore.dropTableClearingLocation(s, s"${p}_src")
+      val r = new PipelineSession(s, config, parallel = par,
+        changedOnly = true).runNodes()
+      assert(r.errors.isEmpty, r.errors.map(_.render))
+      val st = r.results.map(x => x.id -> x.status).toMap
+      assert(st(s"${p}_src").startsWith("SELECT"), st)
+      assert(st.removed(s"${p}_src").values.forall(_ == "SKIP unchanged"), st)
+      assert(aggOf(s, p) == 20L)
+    }
+
+    test(s"changed-only without a restore ($mode): every skipped view is " +
+        "still registered") {
+      val p = if (par) "srp_c" else "srs_c"
+      val db = Files.createTempDirectory("graft-skip-reuse-c")
+      writeFeed(p, 3)
+      val config = skipReuseFixture(p, db)
+      assert(new PipelineSession(spark, config, parallel = par).runNodes()
+        .errors.isEmpty)
+      val s = spark.newSession()
+      val r = new PipelineSession(s, config, parallel = par,
+        changedOnly = true).runNodes()
+      assert(r.results.forall(_.status == "SKIP unchanged"), r.results)
+      Seq("raw", "mid", "join", "agg").foreach(v =>
+        assert(s.catalog.tableExists(s"${p}_$v"), v))
+      assert(aggOf(s, p) == 15L)
+    }
+  }
 }
